@@ -1268,8 +1268,8 @@ def q_embedding_dup_clusters(spark, sf_dir):
     nodes = _table(spark, sf_dir, "embeddings").select("vec_id")
     return dedup_clusters(
         pairs, nodes=nodes, a_col="vec_id", b_col="neighbor", id_col="vec_id",
-        # top-k lists hold distinct neighbors and the a<b filter keeps
-        # each undirected pair from one list only — unique by construction
+        # the self-join emits each ordered (vec_id, neighbor) pair once and
+        # vec_id < neighbor keeps one orientation — unique by construction
         pairs_distinct=True,
     )
 

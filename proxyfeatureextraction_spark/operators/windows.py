@@ -50,11 +50,6 @@ def prefix_sum(df: DataFrame, col: str, out: str | None = None, order_cols=ORDER
     return df.withColumn(out or f"cum_{col}", F.sum(col).over(w))
 
 
-def row_number_col(df: DataFrame, out: str = "rn", order_cols=ORDER_COLS) -> DataFrame:
-    """1-based canonical row number (``cumcount``+1, ``corr:157``)."""
-    return df.withColumn(out, F.row_number().over(conv_window(order_cols)))
-
-
 def chunk_id(rn_col: str = "rn", size: int = 20) -> Column:
     """0-based id of the consecutive chunk-of-`size` a row falls in
     (burst-concentration chunking, ``hayes:174``)."""
@@ -92,10 +87,3 @@ def sessionize(
     gap = F.col(ts_col) - F.lag(ts_col, 1).over(w)
     is_new = F.when(gap > gap_seconds, 1).otherwise(0)
     return df.withColumn(out, F.sum(is_new).over(wcum))
-
-
-def per_second_bucket(ts_col: str = S.TS_SEC) -> Column:
-    """1-anchored second bucket: a turn at t lands in second ceil(t)
-    with t=0 in second 1 (``hayes:188-196`` bucket boundary rule)."""
-    b = F.ceil(F.col(ts_col)).cast("long")
-    return F.when(b < 1, F.lit(1)).otherwise(b)

@@ -1,11 +1,11 @@
 """Full feature-extraction plan — the engine's flagship pipeline.
 
-Fuses the three slice-kernel families (Hayes-150, SLT, host slice
-stats) into ONE shuffle + ONE Arrow pass: the canonical repartition by
-conv_id feeds a single kernel that computes all 324 slice-derived
-columns per conversation. The purely relational parts (host duration /
-Q5 gap, RTT triplet scan, gateway correlation) stay JVM-side and join
-on conv_id afterwards.
+Fuses the slice-kernel families (Hayes-150, SLT, host slice stats and,
+given the gateway bins, the gateway correlation) into ONE shuffle + ONE
+Arrow pass: the canonical repartition by conv_id feeds a single kernel
+that computes every slice-derived column per conversation. The RTT
+scalar rides the same pass as JVM window columns. Host duration / Q5
+gap stay JVM-side and join on conv_id afterwards.
 
 Separate-extractor entry points remain in ``features/*`` (same
 numerics — the fused kernel calls the same batch kernels).
@@ -20,8 +20,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from proxyfeatureextraction_spark import schema as S
+from proxyfeatureextraction_spark.features.corr import (
+    CORR_FIELDS,
+    corr_batch,
+    corr_fanout,
+    gateway_bins,
+)
 from proxyfeatureextraction_spark.features.hayes_vec import hayes_matrix_batch
-from proxyfeatureextraction_spark.features.names import HAYES_NAMES, SLT_NAMES
+from proxyfeatureextraction_spark.features.names import CORR_NAMES, HAYES_NAMES, SLT_NAMES
 from proxyfeatureextraction_spark.features.slt_vec import slt_matrix_batch
 from proxyfeatureextraction_spark.operators.grouped import map_whole_groups
 from proxyfeatureextraction_spark.operators.ordering import conv_window
@@ -50,11 +56,16 @@ def fused_slice_features(
     comp_pkts_limit: int = 50,
     gw: bool = False,
     include_rtt: bool = False,
+    corr_bins: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """conv_id + Hayes(150) + SLT(155) + host-slice(19) in one pass.
 
     Hayes/host columns are NULL for conversations below the ≥pkt_limit
     gate (SLT has no gate — reference behavior).
+
+    ``corr_bins`` (``features.corr.gateway_bins``) adds the nine gateway
+    correlation columns, scored by ``corr_batch`` on the same gated
+    first-K rows the Hayes kernel reads; NULL for ungated conversations.
 
     One exchange total: the windows' own exchange+sort establishes the
     conv-clustered canonical layout, the ≤comp_pkts_limit filter
@@ -113,6 +124,16 @@ def fused_slice_features(
         S.CONV, S.TURN, S.TS, S.TS_SEC, S.DIR, S.N_CHARS, "_n", *passthrough
     )
 
+    schema = T.StructType(
+        [T.StructField(S.CONV, T.StringType())]
+        + [
+            T.StructField(n, T.DoubleType())
+            for n in (*HAYES_NAMES, *SLT_NAMES, *HOST_SLICE_COLS)
+        ]
+        + (CORR_FIELDS if corr_bins is not None else [])
+        + [T.StructField(n, T.DoubleType()) for n in passthrough]
+    )
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         conv = pdf[S.CONV].to_numpy()
         change = np.flatnonzero(conv[1:] != conv[:-1]) + 1
@@ -139,18 +160,14 @@ def fused_slice_features(
             else pd.DataFrame(columns=[S.CONV, *HOST_SLICE_COLS])
         )
         out = slt.merge(hayes, on=S.CONV, how="left").merge(host, on=S.CONV, how="left")
+        if corr_bins is not None:
+            out = out.merge(corr_batch(hayes_in, *corr_bins), on=S.CONV, how="left")
+            out["corr_count"] = out["corr_count"].astype("Int32")
         if passthrough:
             scal = pdf.iloc[starts][[S.CONV, *passthrough]]
             out = out.merge(scal, on=S.CONV, how="left")
-        return out[[S.CONV, *HAYES_NAMES, *SLT_NAMES, *HOST_SLICE_COLS, *passthrough]]
+        return out[schema.fieldNames()]
 
-    schema = T.StructType(
-        [T.StructField(S.CONV, T.StringType())]
-        + [
-            T.StructField(n, T.DoubleType())
-            for n in (*HAYES_NAMES, *SLT_NAMES, *HOST_SLICE_COLS, *passthrough)
-        ]
-    )
     return map_whole_groups(sliced, kernel, schema, pre_ordered=True)
 
 
@@ -174,16 +191,24 @@ def extract_features(
 
     Plan shape (scale-first): ONE full-data exchange — the canonical
     conv_id shuffle inside ``fused_slice_features`` — carries the 324
-    slice columns AND the RTT scalar (JVM window columns, folded in via
-    ``include_rtt``). Host duration + Q5 gap run as a map-side-combined
-    groupBy whose shuffle volume is one row per conversation, then join
-    back per-conv. Nothing re-shuffles the full turn table twice.
-    """
-    from proxyfeatureextraction_spark.features.corr import corr_features
+    slice columns, the gateway correlation and the RTT scalar (JVM
+    window columns, folded in via ``include_rtt``). Host duration + Q5
+    gap run as a map-side-combined groupBy whose shuffle volume is one
+    row per conversation, then join back per-conv. Nothing re-shuffles
+    the full turn table twice.
 
-    sliced = fused_slice_features(derived, pkt_limit, comp_pkts_limit, gw, include_rtt=True)
+    Given a ``gateway``, building the plan runs one eager job: the
+    gateway-bin collect of ``features.corr.gateway_bins``. Past its size
+    gate the correlation comes from the fan-out plan, joined on conv_id.
+    """
+    bins = gateway_bins(gateway) if gateway is not None else None
+    sliced = fused_slice_features(
+        derived, pkt_limit, comp_pkts_limit, gw, include_rtt=True, corr_bins=bins
+    )
     scalars = host_trace_scalars(derived, max_pkts=pkt_limit)
     out = sliced.join(scalars, S.CONV, "left")
-    if gateway is not None:
-        out = out.join(corr_features(derived, gateway, pkt_limit), S.CONV, "left")
-    return out
+    if gateway is None:
+        return out
+    if bins is None:
+        out = out.join(corr_fanout(derived, gateway, pkt_limit), S.CONV, "left")
+    return out.select(*[c for c in out.columns if c not in CORR_NAMES], *CORR_NAMES)

@@ -80,12 +80,6 @@ def filter_split(
     return df.join(F.broadcast(wanted), folder_col, "left_semi")
 
 
-def read_manifest(spark: SparkSession, csv_path: str) -> DataFrame:
-    return spark.read.option("header", "true").csv(csv_path).select(
-        F.col("folder_name"), F.col("split")
-    )
-
-
 def by_source(df: DataFrame, source: str) -> DataFrame:
     """S3: one of the three per-folder sources (background/relayed/proxy)."""
     return df.filter(F.col(S.SOURCE) == source)

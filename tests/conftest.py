@@ -8,7 +8,13 @@ from proxyfeatureextraction_spark.synth import synth_transcripts, synth_transcri
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("pfx-tests", master="local[4]", shuffle_partitions=4)
+    # a 4g heap, not get_spark's 64g default: with 64g the JVM grows to
+    # ~12 GB RSS over the suite, enough for the kernel's OOM killer on a
+    # 15 GB host; at 4g it peaks near 5 GB with the same results and time
+    spark = get_spark(
+        "pfx-tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": "4g"},
+    )
     yield spark
 
 

@@ -6,9 +6,10 @@ import numpy as np
 import pytest
 
 from proxyfeatureextraction_spark import schema as S
+from proxyfeatureextraction_spark.features.corr import corr_features
 from proxyfeatureextraction_spark.features.hayes import hayes_features
 from proxyfeatureextraction_spark.features.host import host_features
-from proxyfeatureextraction_spark.features.names import HAYES_NAMES, SLT_NAMES
+from proxyfeatureextraction_spark.features.names import CORR_NAMES, HAYES_NAMES, SLT_NAMES
 from proxyfeatureextraction_spark.features.slt import slt_features
 from proxyfeatureextraction_spark.plans.extract import (
     HOST_SLICE_COLS,
@@ -72,3 +73,9 @@ def test_extract_features_full(derived):
     np.testing.assert_allclose(all_rtt.loc[rtt.index], rtt["rtt_ratio"], atol=1e-9)
     # convs absent from the standalone output carry NULL in the fused one
     assert all_rtt.drop(rtt.index).isna().all()
+    # the correlation folded into the fused pass equals the standalone op
+    corr = corr_features(derived, derived.select(S.TS_SEC, S.N_CHARS)).toPandas().set_index(S.CONV)
+    fused_corr = pdf.set_index(S.CONV)[CORR_NAMES]
+    assert len(corr), "fixture produced no gated conversations"
+    _cmp(fused_corr.loc[corr.index], corr, CORR_NAMES)
+    assert fused_corr.drop(corr.index).isna().all(axis=None)

@@ -210,8 +210,8 @@ identical layout that shuffles across executors on a real cluster.
 Hayes-150 + SLT + host + RTT + gateway-correlation
 (`plans.extract.extract_features`) at local[{high}]:
 **{ex["turns_per_sec"]:,.0f} turns/sec** ({ex["best_sec"]:.1f} s on
-{ex["turns"]:,} turns). This pipeline is a DAG of ~40 stages (five
-joined families incl. the corr range-join fan-out); at sandbox input
+{ex["turns"]:,} turns). This pipeline is one fused pass, the joined
+host scalars and a gateway-bin collect; at sandbox input
 sizes its wall time is dominated by per-stage scheduling barriers
 (~constant per stage), which do not decrease with core count — the
 single-host analog of driver overhead, amortized away at real input
