@@ -1,14 +1,16 @@
 """Matrix-vectorized Hayes-150 kernel.
 
-After ``gated_first_k(K)`` every conversation contributes exactly K
-rows, so a batch of C conversations reshapes to (C, K) matrices and
-every feature block becomes one numpy expression across ALL
-conversations — no per-conversation Python loop. The only sequential
-dimension left is K (the per-second pointer recurrence iterates K
-times over C-vectors).
+After the ≥K gate and first-K slice of the fused extraction pass
+every conversation contributes exactly K rows, so a batch of C
+conversations reshapes to (C, K) matrices and every feature block
+becomes one numpy expression across ALL conversations — no
+per-conversation Python loop. The only sequential dimension left is K
+(the per-second pointer recurrence iterates K times over C-vectors).
 
-Semantics identical to ``kernels.hayes_vector`` (and thus the
-reference, quirks included) — pinned by tests/test_features_parity.py.
+Semantics are the reference's, quirks included (SURVEY.md §7.3),
+pinned to the ``tests/oracle`` pandas oracle: per batch by
+tests/test_hayes_vectorized.py and through ``extract_features`` by
+tests/test_features_parity.py.
 """
 
 from __future__ import annotations
@@ -98,8 +100,8 @@ def hayes_matrix_batch(pdf: pd.DataFrame, k: int, columns: list[str]) -> pd.Data
     # direction-masked times compacted in ROW order (stable argsort on
     # the mask; NaN pads move to the tail). np.sort would VALUE-order
     # the timestamps, which equals row order only for monotone rows —
-    # the loop kernel (ts[mi] → np.diff) diffs in row order, and the
-    # two kernels must agree on out-of-order timestamps too
+    # the reference (ts[mi] → np.diff) diffs in row order, also on
+    # out-of-order timestamps
     order_in = np.argsort(~mi, axis=1, kind="stable")
     order_out = np.argsort(~mo, axis=1, kind="stable")
     tin = np.take_along_axis(np.where(mi, ts, np.nan), order_in, axis=1)
@@ -126,7 +128,7 @@ def hayes_matrix_batch(pdf: pd.DataFrame, k: int, columns: list[str]) -> pd.Data
     )
 
     # time-percentile block (only its row-sum is emitted — Q1).
-    # t0 is the row MIN (loop kernel: ts.min()), equal to ts[:, 0] only
+    # t0 is the row MIN (reference: ts.min()), equal to ts[:, 0] only
     # for monotone rows; percentiles are order-insensitive, so each rel
     # block is value-sorted before the positional interpolation
     t0 = ts.min(axis=1)
@@ -159,7 +161,10 @@ def hayes_matrix_batch(pdf: pd.DataFrame, k: int, columns: list[str]) -> pd.Data
     medconc = _row_percentile(conc_sorted, conc_cnt, 50)
     maxconc = conc.max(axis=1)
 
-    # per-second pointer recurrence (Q4), K steps over C-vectors
+    # per-second pointer recurrence (Q4), K steps over C-vectors.
+    # Documented divergence: the reference raises IndexError when a
+    # conversation's last ts < 1 s (empty second list, hayes:191-193);
+    # here that conversation gets a single bucket instead
     b = (ts[:, 0] > 1.0).astype(np.int64)
     buckets = np.empty((c, k), dtype=np.int64)
     buckets[:, 0] = b

@@ -1,17 +1,18 @@
-"""Host volume/timing features — hybrid Spark plan.
+"""Host volume/timing features: the fused extraction plan's host kernels.
 
-Reference: ``host_feature_helpers.py:16-136``. Split by cost shape:
+Reference: ``host_feature_helpers.py:16-136``. Split by cost shape, both
+halves reached through ``plans.extract.extract_features``:
 
-- whole-trace scalars (duration, start-ts) → plain ``groupBy`` aggregates
-  (algebraic, skew-safe),
 - first-50-row distribution stats (pandas *sample* std/skew/kurtosis,
-  ``mode()[0]`` smallest-tie — Q7) → Arrow-batched kernel over the
-  K-bounded slice, vectorized with groupby moment sums (pandas
-  ``nanops`` semantics replicated: 1e-14 zero-guard, 0 on zero
-  variance, NaN below the dof minimum),
-- ``gap_between_conns`` (Q5: diffs computed in start-time order,
-  assigned in conv-key order, last key-ordered conv forced 0) → two
-  window passes + a positional self-join per folder scope.
+  ``mode()[0]`` smallest-tie — Q7) → ``_slice_kernel``, run inside the
+  fused Arrow pass on the K-bounded slice, vectorized with groupby
+  moment sums (pandas ``nanops`` semantics replicated: 1e-14
+  zero-guard, 0 on zero variance, NaN below the dof minimum),
+- whole-trace scalars (duration, start-ts) and ``gap_between_conns``
+  (Q5: diffs computed in start-time order, assigned in conv-key order,
+  last key-ordered conv forced 0) → ``trace_scalars``: a ``groupBy``
+  aggregate (algebraic, skew-safe) plus a rank self-join per folder
+  scope, joined back on conv_id.
 """
 
 from __future__ import annotations
@@ -20,13 +21,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from proxyfeatureextraction_spark import schema as S
-from proxyfeatureextraction_spark.operators.grouped import map_whole_groups
-from proxyfeatureextraction_spark.operators.ordering import gated_first_k
 
 STAT_ORDER = ("mean", "median", "mode", "std", "skew", "kurtosis")
+# the slice kernel's columns, under the reference's published names
+HOST_SLICE_COLS = [
+    "pkts_rate",
+    *[f"{s}_{side}" for side in ("vol_total_pkts", "bytes_sent", "bytes_recv") for s in STAT_ORDER],
+]
 
 
 def _zero_fperr(a: np.ndarray) -> np.ndarray:
@@ -96,9 +99,9 @@ def _slice_kernel(gw: bool):
 
         sent_mask = (pdf[S.DIR] == 1) if not gw else (pdf[S.DIR] == -1)
         vals = pdf[S.N_CHARS].astype(float)
-        total = _side_stats(conv, vals, all_convs, "vol")
-        sent = _side_stats(conv[sent_mask], vals[sent_mask], all_convs, "sent")
-        recv = _side_stats(conv[~sent_mask], vals[~sent_mask], all_convs, "recv")
+        total = _side_stats(conv, vals, all_convs, "vol_total_pkts")
+        sent = _side_stats(conv[sent_mask], vals[sent_mask], all_convs, "bytes_sent")
+        recv = _side_stats(conv[~sent_mask], vals[~sent_mask], all_convs, "bytes_recv")
 
         out = pd.concat(
             [rate.rename("pkts_rate").reindex(all_convs), total, sent, recv], axis=1
@@ -107,20 +110,6 @@ def _slice_kernel(gw: bool):
         return out.reset_index(drop=True)
 
     return kernel
-
-
-def _slice_schema() -> T.StructType:
-    fields = [T.StructField(S.CONV, T.StringType()), T.StructField("pkts_rate", T.DoubleType())]
-    for label in ("vol", "sent", "recv"):
-        fields += [T.StructField(f"{s}_{label}", T.DoubleType()) for s in STAT_ORDER]
-    return T.StructType(fields)
-
-
-_RENAME = {
-    **{f"{s}_vol": f"{s}_vol_total_pkts" for s in STAT_ORDER},
-    **{f"{s}_sent": f"{s}_bytes_sent" for s in STAT_ORDER},
-    **{f"{s}_recv": f"{s}_bytes_recv" for s in STAT_ORDER},
-}
 
 
 def trace_scalars(
@@ -161,31 +150,3 @@ def trace_scalars(
         F.when(F.col("_last_key"), F.lit(0.0)).otherwise(F.col("_gap_next")),
     )
     return out.select(gap_scope, S.CONV, "duration", "gap_between_conns")
-
-
-def host_features(
-    derived: DataFrame,
-    gw: bool = False,
-    max_pkts: int = 20,
-    comp_pkts_limit: int = 50,
-    gap_scope: str = S.FOLDER,
-) -> DataFrame:
-    # first-50 slice stats (gate ≥ max_pkts, slice ≤ comp_pkts_limit)
-    sliced = gated_first_k(derived, max_pkts, slice_k=comp_pkts_limit).select(
-        S.CONV, S.TURN, S.TS, S.TS_SEC, S.DIR, S.N_CHARS
-    )
-    stats = map_whole_groups(sliced, _slice_kernel(gw), _slice_schema())
-    for old, new in _RENAME.items():
-        stats = stats.withColumnRenamed(old, new)
-
-    return (
-        trace_scalars(derived, max_pkts=max_pkts, gap_scope=gap_scope)
-        .join(stats, S.CONV, "inner")
-        .select(
-            gap_scope, S.CONV, "pkts_rate", "duration",
-            *[_RENAME[f"{s}_vol"] for s in STAT_ORDER],
-            *[_RENAME[f"{s}_sent"] for s in STAT_ORDER],
-            *[_RENAME[f"{s}_recv"] for s in STAT_ORDER],
-            "gap_between_conns",
-        )
-    )

@@ -56,11 +56,10 @@ def first_k(df: DataFrame, k: int, order_cols=ORDER_COLS) -> DataFrame:
     return df.withColumn("_rn", rn).filter(F.col("_rn") <= k).drop("_rn")
 
 
-def gated_first_k(df: DataFrame, k: int, slice_k: int | None = None) -> DataFrame:
-    """≥k gate + first-(slice_k or k) slice in a single window pass."""
-    slice_k = slice_k or k
+def gated_first_k(df: DataFrame, k: int) -> DataFrame:
+    """≥k gate + first-k slice in a single window pass."""
     w = conv_window()
     out = df.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_n", F.count(F.lit(1)).over(Window.partitionBy(S.CONV))
     )
-    return out.filter((F.col("_n") >= k) & (F.col("_rn") <= slice_k)).drop("_rn", "_n")
+    return out.filter((F.col("_n") >= k) & (F.col("_rn") <= k)).drop("_rn", "_n")

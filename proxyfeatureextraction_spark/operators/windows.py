@@ -1,10 +1,10 @@
 """Ordered/analytic window primitives (SURVEY.md §2.5).
 
-All point-in-time-safe primitives use frames ending at ``currentRow``
-(temporal-leakage discipline). ``lead_cols`` is the one explicitly
-LEAKY primitive — it reads the future by construction — and is flagged
-so the leakage audit (tests/test_invariants.py) can assert it never
-enters an as-of feature surface.
+Every primitive here uses a frame ending at ``currentRow``
+(temporal-leakage discipline), so all of them are point-in-time safe.
+Columns that read the future must carry ``LEAKY_PREFIX``; the leakage
+audit (tests/test_invariants.py) asserts none reaches the as-of
+feature surface.
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from proxyfeatureextraction_spark import schema as S
 from proxyfeatureextraction_spark.operators.ordering import ORDER_COLS, conv_window
 
-# names of generated columns that read past currentRow (audited by tests)
+# prefix reserved for columns that read past currentRow (audited by tests)
 LEAKY_PREFIX = "lead_"
 
 
@@ -25,15 +25,6 @@ def lag_cols(df: DataFrame, cols: dict[str, int], order_cols=ORDER_COLS) -> Data
     w = conv_window(order_cols)
     for col, n in cols.items():
         df = df.withColumn(f"lag_{col}_{n}", F.lag(col, n).over(w))
-    return df
-
-
-def lead_cols(df: DataFrame, cols: dict[str, int], order_cols=ORDER_COLS) -> DataFrame:
-    """``lead_<col>_<n>`` — LEAKY (reads ts' > ts); only for flagged
-    non-point-in-time outputs (W6 triplet scan, W8 next-conv gap)."""
-    w = conv_window(order_cols)
-    for col, n in cols.items():
-        df = df.withColumn(f"{LEAKY_PREFIX}{col}_{n}", F.lead(col, n).over(w))
     return df
 
 

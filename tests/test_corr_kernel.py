@@ -129,21 +129,29 @@ def test_extract_features_edge_cases(edge, monkeypatch, cap):
 
 
 def test_results_independent_of_shuffle_partitions(spark, edge):
+    """Every extract_features column, and corr_features, are the same at
+    1 and 8 shuffle partitions and with 7-record Arrow batches, which
+    split conversations across batches of the pre-ordered fused kernel
+    (the carry branch of map_whole_groups)."""
     derived, gateway, _, _, _ = edge
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    parts, batch = "spark.sql.shuffle.partitions", "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = {key: spark.conf.get(key) for key in (parts, batch)}
+    runs = {"parts1": {parts: "1"}, "parts8": {parts: "8"}, "batch7": {batch: "7"}}
     out = {}
     try:
-        for parts in (1, 8):
-            spark.conf.set(key, str(parts))
-            out[parts] = (
+        for label, conf in runs.items():
+            for key, value in conf.items():
+                spark.conf.set(key, value)
+            out[label] = (
                 _frame(corr_features(derived, gateway)),
-                _frame(extract_features(derived, gateway))[CORR_NAMES],
+                _frame(extract_features(derived, gateway)),
             )
     finally:
-        spark.conf.set(key, before)
-    for a, b in zip(out[1], out[8]):
-        pd.testing.assert_frame_equal(a, b)
+        for key, value in before.items():
+            spark.conf.set(key, value)
+    for label in ("parts8", "batch7"):
+        for a, b in zip(out["parts1"], out[label]):
+            pd.testing.assert_frame_equal(a, b)
 
 
 def test_forced_fallback_matches_oracle(spark, transcripts_df, transcripts_pdf, monkeypatch):

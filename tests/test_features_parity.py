@@ -1,8 +1,11 @@
-"""Spark feature kernels vs the reference-validated pandas oracles.
+"""The production extraction plan vs the reference-validated pandas oracles.
 
+Each family's parity test reads its columns from ``extract_features``,
+the plan every caller runs, so the oracles pin the code that ships.
 allclose atol=1e-5 per the reference's own tolerance
 (test_corr_extractor.py:158); NaNs compare equal (they are part of the
 reference semantics — e.g. std_order_in of a single-role conversation).
+Conversations an oracle does not emit carry NULL in its columns.
 """
 
 from __future__ import annotations
@@ -13,10 +16,7 @@ import pytest
 
 from proxyfeatureextraction_spark import schema as S
 from proxyfeatureextraction_spark.features.corr import corr_features
-from proxyfeatureextraction_spark.features.hayes import hayes_features
-from proxyfeatureextraction_spark.features.host import host_features
-from proxyfeatureextraction_spark.features.rtt import rtt_features
-from proxyfeatureextraction_spark.features.slt import slt_features
+from proxyfeatureextraction_spark.plans.extract import extract_features
 from proxyfeatureextraction_spark.schema import with_derived
 from tests.oracle.packet_view import to_packet_view
 from tests.oracle.ref_corr import corr_by_conn
@@ -40,14 +40,21 @@ def packets(transcripts_pdf):
     return to_packet_view(transcripts_pdf)
 
 
+@pytest.fixture(scope="module")
+def extracted(derived):
+    return extract_features(derived).toPandas()
+
+
 def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, key=S.CONV):
+    """The oracle's rows match at ATOL; every other conversation of
+    ``spark_pdf`` is NULL in the oracle's columns."""
     oracle_pdf = oracle_pdf.rename(columns={"conn": key})
-    assert set(spark_pdf[key]) == set(oracle_pdf[key])
+    assert set(oracle_pdf[key]) <= set(spark_pdf[key])
     cols = [c for c in oracle_pdf.columns if c != key]
     missing = set(cols) - set(spark_pdf.columns)
     assert not missing, f"spark output missing {missing}"
-    a = spark_pdf.set_index(key).sort_index()
     b = oracle_pdf.set_index(key).sort_index()
+    a = spark_pdf.set_index(key).loc[b.index]
     for c in cols:
         np.testing.assert_allclose(
             a[c].to_numpy(dtype=float),
@@ -56,18 +63,32 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, key=S.CONV):
             equal_nan=True,
             err_msg=c,
         )
+    outside = spark_pdf.set_index(key).drop(b.index)
+    assert outside[cols].isna().all(axis=None), "values outside the oracle's gate"
 
 
-def test_hayes_parity(derived, packets):
-    compare(hayes_features(derived, 20).toPandas(), hayes_by_conn(packets, 20))
+def _host_oracle(packets, gw: bool) -> pd.DataFrame:
+    # reference scope = one folder per call; concat per-folder oracles
+    return pd.concat(
+        [host_by_conn(g, gw=gw) for _, g in packets.groupby("folder_name")],
+        ignore_index=True,
+    )
 
 
-def test_slt_parity(derived, packets):
-    compare(slt_features(derived, 20).toPandas(), slt_by_conn(packets, 20))
+def test_hayes_parity(extracted, packets):
+    oracle = hayes_by_conn(packets, 20)
+    assert len(oracle) < len(extracted), "fixture has no conversation below the gate"
+    compare(extracted, oracle)
 
 
-def test_rtt_parity(derived, packets):
-    compare(rtt_features(derived, 20).toPandas(), rtt_by_conn(packets, 20))
+def test_slt_parity(extracted, packets):
+    compare(extracted, slt_by_conn(packets, 20))
+
+
+def test_rtt_parity(extracted, packets):
+    oracle = rtt_by_conn(packets, 20)
+    assert 0 < len(oracle) < len(extracted), "fixture has no RTT-qualifying/excluded conversation"
+    compare(extracted, oracle)
 
 
 def test_corr_parity(derived, packets):
@@ -79,63 +100,17 @@ def test_corr_parity(derived, packets):
     compare(spark_out, oracle)
 
 
-def test_host_parity(derived, packets):
-    spark_out = host_features(derived, gw=False).toPandas()
-    # reference scope = one folder per call; concat per-folder oracles
-    oracle = pd.concat(
-        [host_by_conn(g, gw=False) for _, g in packets.groupby("folder_name")],
-        ignore_index=True,
-    )
-    compare(spark_out.drop(columns=[S.FOLDER]), oracle)
+def test_host_parity(extracted, packets):
+    compare(extracted, _host_oracle(packets, gw=False))
 
 
 def test_host_parity_gw_true(derived, packets):
-    spark_out = host_features(derived, gw=True).toPandas()
-    oracle = pd.concat(
-        [host_by_conn(g, gw=True) for _, g in packets.groupby("folder_name")],
-        ignore_index=True,
-    )
-    compare(spark_out.drop(columns=[S.FOLDER]), oracle)
+    compare(extract_features(derived, gw=True).toPandas(), _host_oracle(packets, gw=True))
 
 
 def test_empty_input(spark, derived):
     empty = derived.limit(0)
-    assert hayes_features(empty).count() == 0
-    assert slt_features(empty).count() == 0
-    assert rtt_features(empty).count() == 0
-    assert host_features(empty).count() == 0
     gw = derived.select(S.TS_SEC, S.N_CHARS)
+    assert extract_features(empty).count() == 0
+    assert extract_features(empty, gw).count() == 0
     assert corr_features(empty, gw).count() == 0
-
-
-def test_hayes_matrix_kernel_row_order_semantics_nonmonotone_ts():
-    """Review regression: the (C, K)-matrix kernel must equal the loop
-    kernel on conversations whose canonical (turn_idx) order is NOT
-    time-monotone — the loop kernel diffs direction times in ROW order
-    and anchors percentiles at ts.min(); a value-sorting matrix kernel
-    silently disagreed on such rows."""
-    from proxyfeatureextraction_spark.features.hayes_vec import hayes_matrix_batch
-    from proxyfeatureextraction_spark.features.kernels import hayes_vector
-    from proxyfeatureextraction_spark.features.names import HAYES_NAMES
-
-    rng = np.random.default_rng(7)
-    k = 20
-    rows = []
-    for conv in ("x", "y", "z"):
-        ts = np.round(rng.uniform(0, 30, size=k), 3)  # deliberately unsorted
-        if conv == "y":
-            ts = np.sort(ts)  # one monotone control conversation
-        dr = rng.choice([-1, 1], size=k)
-        for i in range(k):
-            rows.append((conv, float(ts[i]), int(dr[i])))
-    pdf = pd.DataFrame(rows, columns=["conv_id", "ts_sec", "dir"])
-    got = hayes_matrix_batch(pdf, k=k, columns=HAYES_NAMES).set_index("conv_id")
-    for conv, grp in pdf.groupby("conv_id", sort=False):
-        exp = hayes_vector(
-            grp["ts_sec"].to_numpy(), grp["dir"].to_numpy(), None
-        )
-        np.testing.assert_allclose(
-            got.loc[conv, HAYES_NAMES].to_numpy(dtype=float), exp,
-            atol=ATOL, equal_nan=True,
-            err_msg=f"matrix kernel diverges from loop kernel for {conv}",
-        )
